@@ -156,8 +156,8 @@ def phash_near_dup_pairs(
 ) -> DataFrame:
     """IMAGE near-duplicate detection — the multimodal arm of the dedup
     suite: perceptual-hash the payload (batched DCT, mapInPandas), then the
-    same block-pigeonhole candidate join the text SimHash path uses
-    (``text.hash_near_dup_pairs``). With 8-bit blocks the pigeonhole bound
+    same block-pigeonhole bucket pairs the text SimHash path uses
+    (``text.hash_near_dup_pairs`` over ``text.bucket_pairs``). With 8-bit blocks the pigeonhole bound
     makes recall EXACT for hamming <= 7 (a pair differing in <= 7 bits
     cannot touch all 8 blocks); measured kernel behavior on noised twins
     (2% pixels perturbed +-10) is hamming <= 2 vs >= 22 for independent
@@ -165,8 +165,9 @@ def phash_near_dup_pairs(
     ``phash_col`` to reuse a stored hash (e.g. the input_hint table's
     ``phash`` column) and skip the decode+DCT stage entirely.
 
-    Scale posture: candidates come from an equi-join on (block, value) —
-    never all-pairs; the decode+DCT stage is one Arrow pass."""
+    Scale posture: candidates come from grouping on (block, value) —
+    never all-pairs; the hashed rows have one consumer, so the decode+DCT
+    stage is one Arrow pass per call, with no cache left behind."""
     from .text import hash_near_dup_pairs
 
     if phash_col is None:
@@ -308,7 +309,7 @@ def dedup_images(
 ) -> DataFrame:
     """One-call IMAGE corpus dedup — the multimodal twin of
     clusters.dedup_documents: perceptual-hash near-dup pairs
-    (phash_near_dup_pairs: batched DCT + block-pigeonhole candidate join,
+    (phash_near_dup_pairs: batched DCT + block-pigeonhole bucket pairs,
     or a stored ``phash_col`` skipping decode entirely) -> connected
     components -> deterministic keeper. Returns imgs + (cluster_id,
     is_keeper); ``.where("is_keeper")`` is the deduplicated image corpus.

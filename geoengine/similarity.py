@@ -12,12 +12,15 @@ the hyperplane signature UDF (vectorized numpy matmul per Arrow batch).
 from __future__ import annotations
 
 from functools import lru_cache
+from itertools import combinations
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from .text import bucket_pairs
 
 
 def _dot(a: str, b: str) -> F.Column:
@@ -495,9 +498,9 @@ def cosine_near_dup_exact(
     configuration. Candidates come from the suffix-norm prefix index
     (near_dup_prefix_index: minimal heavy prefix per vector with excluded
     l2 mass <= t/2, complete by Cauchy-Schwarz); the exact cosine verifies
-    each collision. The candidate join ships only (doc, dim) pairs; the
-    wide arrays are joined back AFTER pair-level dedup, so they never ride
-    the exploded shuffle.
+    each collision. The candidate grouping ships only (doc, dim) pairs;
+    the wide arrays are joined back AFTER pair-level dedup, so they never
+    ride the exploded shuffle.
 
     ``dim`` is accepted for backward compatibility and ignored — the
     suffix-norm rule needs no dimensionality, so plan construction no
@@ -505,18 +508,14 @@ def cosine_near_dup_exact(
     aggregate jobs at build time to measure the candidate-pair upper bound
     and WARNS loudly when the prefilter has degenerated past half of
     all-pairs (flat weight spectra) — correctness is unaffected either
-    way; the warning points dense-flat inputs at cosine_near_dup_pairs."""
-    buckets = near_dup_prefix_index(vectors, threshold, id_col, vec_col)
-    # CACHED: the self-join's two branches (and the dense guard's two
-    # aggregates) would otherwise EACH recompute the index's posexplode +
-    # cumulative-mass window. Same storage trade as the LSH builders'
-    # signature caches: one narrow (doc, d) block per call, LRU-evictable,
-    # released by spark.catalog.clearCache() in long-lived sessions.
-    buckets = buckets.cache()
+    way; the warning points dense-flat inputs at cosine_near_dup_pairs.
+    The index is not cached, so each of those aggregates recomputes it
+    (posexplode + window) once more; the guard is opt-in."""
+    index = near_dup_prefix_index(vectors, threshold, id_col, vec_col)
     if dense_guard:
         import warnings
 
-        n_docs, bound = dense_candidate_bound(buckets)
+        n_docs, bound = dense_candidate_bound(index)
         all_pairs = n_docs * (n_docs - 1) / 2
         if all_pairs > 0 and bound >= 0.5 * all_pairs:
             warnings.warn(
@@ -527,13 +526,7 @@ def cosine_near_dup_exact(
                 f"scale",
                 stacklevel=2,
             )
-    cand = (
-        buckets.alias("l")
-        .join(buckets.alias("r"), "d")
-        .where(F.col("l.doc") < F.col("r.doc"))
-        .select(F.col("l.doc").alias("doc1"), F.col("r.doc").alias("doc2"))
-        .dropDuplicates(["doc1", "doc2"])
-    )
+    cand = bucket_pairs(index, ["d"]).dropDuplicates(["doc1", "doc2"])
     # norms hoisted to once-per-ROW on the attach side — they were
     # interpreted HOF folds re-run per candidate PAIR (3 folds x dim per
     # pair -> 1 dot fold + a multiply); bit-identical cosine (the same
@@ -567,51 +560,44 @@ def cosine_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id1 < id2, cosine >= t).
 
-    Scale path: random-hyperplane sign buckets on both sides; the left side
-    multi-probes its bucket plus all single-bit flips, so any pair whose
-    sign patterns differ in <= probe_bits planes collides — near-identical
-    vectors (the near-dup regime) almost never disagree on a hyperplane.
-    The exact cosine (zip_with/aggregate Columns, JVM codegen) runs only on
-    colliding pairs; no all-pairs join ever materializes. Recall at the
-    certification threshold is measured (tests + oracle gate), like the
-    SimHash block prefilter. ``dim`` may stay None — the hyperplane UDF
-    derives its plane matrix lazily per worker from the seeded rng, so no
-    plan-build-time job runs."""
+    Scale path: random-hyperplane sign buckets. For every subset S of
+    min(probe_bits, 2) planes a vector is keyed by (S, its sign pattern
+    with S's bits cleared); two vectors share such a key exactly when
+    their sign patterns differ in <= probe_bits planes (at most 2) —
+    near-identical vectors (the near-dup regime) almost never disagree on
+    a hyperplane. The exact cosine (zip_with/aggregate Columns, JVM
+    codegen) runs only on colliding pairs; no all-pairs join ever
+    materializes. Recall at the certification threshold is measured
+    (tests + oracle gate), like the SimHash block prefilter. ``dim`` may
+    stay None — the hyperplane UDF derives its plane matrix lazily per
+    worker from the seeded rng, so no plan-build-time job runs."""
     from .join import spread_small_input
 
     sig = make_hyperplane_sig_udf(dim, n_planes, seed)
-    # spread a narrow scan before the signature kernel and CACHE the signed
-    # slice: the probe/build branches below would otherwise each rerun the
-    # hyperplane UDF (same pattern as the text LSH builders; one narrow
-    # cached block per call). The per-row norm rides along so the exact
-    # verify pays one dot fold per pair instead of three (bit-identical).
-    base = spread_small_input(
-        vectors.select(F.col(id_col).alias("doc"), F.col(vec_col).alias("v")),
-        F.col("doc"),
-    ).withColumn("bucket0", sig(F.col("v"))).withColumn("_n", _norm("v")).cache()
-    masks = [0]
-    if probe_bits >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if probe_bits >= 2:
-        masks += [
-            (1 << i) | (1 << j)
-            for i in range(n_planes)
-            for j in range(i + 1, n_planes)
-        ]
-    probes = F.array(*[F.col("bucket0").bitwiseXOR(F.lit(m)) for m in masks])
-    l = (
-        base.withColumn("bucket", F.explode(probes))
-        .select(F.col("doc").alias("doc1"), F.col("v").alias("v1"),
-                F.col("_n").alias("_n1"), "bucket")
-    )
-    r = base.select(
-        F.col("doc").alias("doc2"), F.col("v").alias("v2"),
-        F.col("_n").alias("_n2"), F.col("bucket0").alias("bucket"),
+    probe = min(probe_bits, 2, n_planes)
+    masks = [sum(1 << i for i in s)
+             for s in combinations(range(n_planes), probe)]
+    keys = F.array(*[
+        F.struct(F.lit(m).alias("probe"),
+                 F.col("bucket0").bitwiseAND(F.lit(~m)).alias("bucket"))
+        for m in masks
+    ])
+    # spread a narrow scan before the signature kernel (one consumer: the
+    # bucket grouping, so the hyperplane UDF runs once). The per-row norm
+    # rides along so the exact verify pays one dot fold per pair instead
+    # of three (bit-identical).
+    keyed = (
+        spread_small_input(
+            vectors.select(F.col(id_col).alias("doc"), F.col(vec_col).alias("v")),
+            F.col("doc"),
+        )
+        .withColumn("bucket0", sig(F.col("v")))
+        .select("doc", "v", _norm("v").alias("_n"), F.explode(keys).alias("k"))
+        .select("doc", "v", "_n", "k.probe", "k.bucket")
     )
     sim = _dot("v1", "v2") / (F.col("_n1") * F.col("_n2"))
     return (
-        l.join(r, "bucket")
-        .where(F.col("doc1") < F.col("doc2"))
+        bucket_pairs(keyed, ["probe", "bucket"], carry=["v", "_n"])
         .dropDuplicates(["doc1", "doc2"])
         .withColumn("cosine", sim)
         .where(F.col("cosine") >= threshold)

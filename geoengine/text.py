@@ -4,9 +4,9 @@ document fingerprinting.
 
 Design: everything shuffle-bearing is expressed as DataFrame ops on compact
 integer/hash keys; Python appears only in vectorized pandas UDFs computing
-per-document signatures (Arrow-batched numpy). At 100 TB the LSH band join
-is the scale path: candidate pairs come from an equi-join on (band, bucket)
-— never a cross join.
+per-document signatures (Arrow-batched numpy). At 100 TB LSH banding is the
+scale path: candidate pairs come from grouping on (band, bucket) — one
+:func:`bucket_pairs` primitive behind every near-dup — never a cross join.
 """
 
 from __future__ import annotations
@@ -424,6 +424,41 @@ def pack_sequences(
     ).withColumn("n_tokens", n_tokens)
 
 
+def bucket_pairs(keyed: DataFrame, keys, carry=()) -> DataFrame:
+    """(doc1 < doc2) pairs of ``keyed`` rows sharing every ``keys`` value —
+    the one bucket self-join behind every LSH band, pigeonhole block and
+    prefix-index near-dup.
+
+    One groupBy on the keys collects each bucket's ``struct(doc, *carry)``
+    sorted by doc; singleton buckets are dropped before any pair exists,
+    and every other bucket emits its upper triangle (posexplode + slice).
+    The keyed rows have ONE consumer, so the signature stage upstream runs
+    once with no cache. Rows with a null key never pair (equi-join
+    semantics), nor do two rows with equal doc ids.
+
+    Output: (doc1, doc2, c1, c2 for each carried column c) — one row per
+    pair per shared bucket; callers filter, then dedup on (doc1, doc2)."""
+    carry = list(carry)
+    buckets = (
+        keyed.dropna(subset=list(keys))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("doc", *carry))).alias("_m"))
+        .where(F.size("_m") > 1)
+    )
+    return (
+        buckets.select(F.posexplode("_m").alias("_i", "_a"), "_m")
+        .select("_a", F.explode(F.expr("slice(_m, _i + 2, size(_m) - _i - 1)"))
+                .alias("_b"))
+        .where(F.col("_a.doc") < F.col("_b.doc"))
+        .select(
+            F.col("_a.doc").alias("doc1"),
+            F.col("_b.doc").alias("doc2"),
+            *[F.col(f"{side}.{c}").alias(f"{c}{i}")
+              for c in carry for i, side in ((1, "_a"), (2, "_b"))],
+        )
+    )
+
+
 def minhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -433,33 +468,24 @@ def minhash_near_dup_pairs(
     jaccard_threshold: float = 0.5,
     shingle_k: int = 5,
 ) -> DataFrame:
-    """MinHash + LSH banding: signature -> band buckets -> equi-join on
+    """MinHash + LSH banding: signature -> band buckets -> bucket pairs on
     (band, bucket) -> estimated-Jaccard filter. No cross join anywhere;
-    the band join shuffles on a 64-bit bucket hash (scale path)."""
+    the band grouping shuffles on a 64-bit bucket hash (scale path)."""
     from .join import spread_small_input
 
     rows = num_hashes // bands
     sig = make_minhash_udf(num_hashes, shingle_k)
-    with_sig = (
+    banded = (
         # spread a narrow scan first: the shingling/MinHash Arrow kernel
         # otherwise runs single-task on a one-row-group file (guide §2.2)
         spread_small_input(
             docs.select(F.col(id_col).alias("doc"), F.col(text_col)),
             F.col("doc"),
         )
-        .withColumn("sig", sig(F.col(text_col)))
-        .drop(text_col)
-        .cache()  # self-joined below: compute the signature UDF once
+        .select("doc", sig(F.col(text_col)).alias("sig"))
+        .select("doc", "sig", band_bucket_expr(bands, rows).alias("bb"))
+        .select("doc", "sig", "bb.band", "bb.bucket")
     )
-
-    banded = with_sig.select(
-        "doc",
-        "sig",
-        band_bucket_expr(bands, rows).alias("bb"),
-    ).select("doc", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    left = banded.alias("l")
-    right = banded.alias("r")
     est = F.expr(
         "aggregate(zip_with(sig1, sig2, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
         "0, (acc, v) -> acc + v)"
@@ -470,18 +496,7 @@ def minhash_near_dup_pairs(
     # surviving pairs and to 3 narrow columns instead of two 64-long
     # signatures per row (guide §2.3)
     return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(
-            F.col("l.doc").alias("doc1"),
-            F.col("r.doc").alias("doc2"),
-            F.col("l.sig").alias("sig1"),
-            F.col("r.sig").alias("sig2"),
-        )
+        bucket_pairs(banded, ["band", "bucket"], carry=["sig"])
         .withColumn("est_jaccard", est)
         .where(F.col("est_jaccard") >= jaccard_threshold)
         .select("doc1", "doc2", "est_jaccard")
@@ -495,58 +510,40 @@ def hash_near_dup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 6,
     block_bits: int = 16,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Generic 64-bit-hash near-dup via block pigeonhole — works on ANY
     int64 signature column (simhash of text, phash of images, ...). Split
     the hash into 64/block_bits exact blocks; a pair within hamming<=k
     MUST share >=1 unchanged block whenever k < 64/block_bits (pigeonhole
-    — exact recall in that regime; wider k is recall-bounded) -> equi-join
-    per (block index, block value), exact popcount filter. Never an
-    all-pairs plan: candidates come from the block equi-join.
+    — exact recall in that regime; wider k is recall-bounded) -> bucket
+    pairs per (block index, block value), exact popcount filter. Never an
+    all-pairs plan: candidates come from the block buckets.
 
     Output: (id1, id2, hamming), id1 < id2, each pair once.
 
-    The (id, hash) projection is CACHED before the self-join: the two join
-    branches would otherwise each re-execute the (possibly expensive)
-    signature stage — a pandas-UDF simhash or a decode+DCT phash — since a
-    broadcast build side is not exchange-reused. Same protection (and
-    cache-block trade) as minhash_near_dup_pairs' signature cache; the
-    cached slice is two compact columns. Pass ``cache_registry`` (a list;
-    same contract as knn_join_rings) to collect the cached slice for
-    unpersisting once the pairs are materialized — in a long-lived session
-    without it, one small block per call stays in storage memory."""
+    The (id, hash) rows feed one grouping (:func:`bucket_pairs`), so the
+    possibly expensive signature stage upstream — a pandas-UDF simhash or
+    a decode+DCT phash — runs once per call, with no cache to release."""
     from .join import spread_small_input
 
-    d = spread_small_input(
-        df.select(F.col(id_col).alias("doc"), F.col(hash_col).alias("_h64")),
-        F.col("doc"),
-    ).cache()
-    if cache_registry is not None:
-        cache_registry.append(d)
-    blocked = d.select(
-        "doc",
-        "_h64",
-        block_split_expr(block_bits, "_h64").alias("bb"),
-    ).select("doc", "_h64", "bb.blk", "bb.val")
-    l, r = blocked.alias("l"), blocked.alias("r")
+    blocked = (
+        spread_small_input(
+            df.select(F.col(id_col).alias("doc"), F.col(hash_col).alias("h")),
+            F.col("doc"),
+        )
+        .select("doc", "h", block_split_expr(block_bits, "h").alias("bb"))
+        .select("doc", "h", "bb.blk", "bb.val")
+    )
     # popcount + threshold BEFORE the dedup exchange (duplicates of a pair
     # carry identical hashes, so the hamming filter commutes with the
     # dedup): the shuffle then moves only the surviving (doc1, doc2,
     # hamming) rows — guide §2.3
     return (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
+        bucket_pairs(blocked, ["blk", "val"], carry=["h"])
         .select(
-            F.col("l.doc").alias("doc1"),
-            F.col("r.doc").alias("doc2"),
-            F.bit_count(
-                F.col("l._h64").bitwiseXOR(F.col("r._h64"))
-            ).alias("hamming"),
+            "doc1",
+            "doc2",
+            F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["doc1", "doc2"])
@@ -563,7 +560,7 @@ def simhash_near_dup_pairs(
     """SimHash near-dup via block permutation: split the 64-bit hash into
     4 x 16-bit blocks; pairs within hamming<=k must share >=1 exact block
     (pigeonhole for k<=3 with 4 blocks; wider k accepted as recall-bounded)
-    -> equi-join per block, exact popcount filter."""
+    -> bucket pairs per block, exact popcount filter."""
     from .join import spread_small_input
 
     sim = make_simhash_udf()
@@ -584,12 +581,12 @@ def ngram_jaccard_pairs(
     threshold: float = 0.3,
     max_group_rows: int | None = None,
 ) -> DataFrame:
-    """Exact word-set Jaccard within candidate groups (blocked self-join) —
-    the exact-verification stage after an LSH prefilter.
+    """Exact word-set Jaccard within candidate groups (bucket pairs per
+    group) — the exact-verification stage after an LSH prefilter.
 
-    SCALE WARNING: this is QUADRATIC within each ``group_col`` group (the
-    self-join emits |g|^2/2 candidate rows per group). That is the point
-    when the groups are LSH buckets or otherwise pre-blocked candidates —
+    SCALE WARNING: this is QUADRATIC within each ``group_col`` group (it
+    emits |g|^2/2 candidate rows per group). That is the point when the
+    groups are LSH buckets or otherwise pre-blocked candidates —
     but calling it directly on a raw corpus column with a hot group (one
     crawler domain with 10^7 docs) materializes ~10^14 pairs. At corpus
     scale use :func:`lsh_verified_jaccard_pairs`, which generates
@@ -618,114 +615,60 @@ def ngram_jaccard_pairs(
         F.col(group_col).alias("grp"),
         F.array_distinct(F.split(F.col(text_col), " ")).alias("words"),
     )
-    l, r = d.alias("l"), d.alias("r")
-    inter = F.size(F.array_intersect(F.col("l.words"), F.col("r.words")))
-    uni = (
-        F.size(F.col("l.words")) + F.size(F.col("r.words")) - inter
-    )
+    inter = F.size(F.array_intersect(F.col("words1"), F.col("words2")))
+    uni = F.size("words1") + F.size("words2") - inter
     return (
-        l.join(
-            r,
-            (F.col("l.grp") == F.col("r.grp")) & (F.col("l.doc") < F.col("r.doc")),
-        )
+        bucket_pairs(d, ["grp"], carry=["words"])
         .withColumn("jaccard", inter.cast("double") / uni.cast("double"))
         .where(F.col("jaccard") >= threshold)
-        .select(
-            F.col("l.doc").alias("doc1"),
-            F.col("r.doc").alias("doc2"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
+        .select("doc1", "doc2", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
-def _minhash_band_candidates(
+def _lsh_candidates(
     docs: DataFrame,
     id_col: str,
     text_col: str,
+    prefilter: str,
     num_hashes: int,
     bands: int,
     shingle_k: int,
-    items: str = "shingles",
-) -> DataFrame:
-    """(doc1 < doc2) candidate pairs = any band-bucket collision (no
-    estimated-Jaccard filter — recall belongs to band tuning, precision to
-    the exact verify stage downstream). ``items='words'`` signs the distinct
-    word set (the same item space the exact word-Jaccard verify measures);
-    ``'shingles'`` signs char k-shingles."""
-    from .join import spread_small_input
-
-    rows = num_hashes // bands
-    if items == "words":
-        sig_col = make_minhash_from_hashes_udf(num_hashes)(
-            word_hashes_expr(text_col)
-        )
-    else:
-        sig_col = make_minhash_udf(num_hashes, shingle_k)(F.col(text_col))
-    # spread BEFORE the signature kernel (single-row-group files otherwise
-    # run it single-task — and that one task would also own the whole
-    # band-collision join fanout); cache so the self-join's two branches
-    # compute the signature stage once, mirroring minhash_near_dup_pairs
-    with_sig = (
-        spread_small_input(
-            docs.select(F.col(id_col).alias("doc"), F.col(text_col)),
-            F.col("doc"),
-        )
-        .withColumn("sig", sig_col)
-        .drop(text_col)
-        .cache()
-    )
-    banded = with_sig.select(
-        "doc",
-        band_bucket_expr(bands, rows).alias("bb"),
-    ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    l, r = banded.alias("l"), banded.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(F.col("l.doc").alias("doc1"), F.col("r.doc").alias("doc2"))
-        .dropDuplicates(["doc1", "doc2"])
-    )
-
-
-def _simhash_block_candidates(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
     block_bits: int,
-    shingle_k: int = 5,
-    items: str = "shingles",
+    items: str,
 ) -> DataFrame:
-    """(doc1 < doc2) candidate pairs sharing >=1 exact simhash block
-    (pigeonhole: guarantees recall of every pair with hamming <
-    64/block_bits)."""
+    """(doc1 < doc2) candidate pairs: any MinHash band-bucket collision
+    (``prefilter='minhash'``) or any shared exact SimHash block
+    (``'simhash'``; pigeonhole recall of every pair with hamming <
+    64/block_bits). No estimate filter — recall belongs to band tuning,
+    precision to the exact verify stage downstream. ``items='words'``
+    signs the distinct word set (the same item space the exact word-Jaccard
+    verify measures); ``'shingles'`` signs char k-shingles."""
     from .join import spread_small_input
 
-    if items == "words":
-        sim_col = make_simhash_from_hashes_udf()(word_hashes_expr(text_col))
+    words = word_hashes_expr(text_col)
+    text = F.col(text_col)
+    if prefilter == "minhash":
+        sig = (make_minhash_from_hashes_udf(num_hashes)(words) if items == "words"
+               else make_minhash_udf(num_hashes, shingle_k)(text))
+        keys = band_bucket_expr(bands, num_hashes // bands, "sig")
+    elif prefilter == "simhash":
+        sig = (make_simhash_from_hashes_udf()(words) if items == "words"
+               else make_simhash_udf(shingle_k)(text))
+        keys = block_split_expr(block_bits, "sig")
     else:
-        sim_col = make_simhash_udf(shingle_k)(F.col(text_col))
-    # same spread+cache rationale as _minhash_band_candidates
-    d = spread_small_input(
-        docs.select(F.col(id_col).alias("doc"), F.col(text_col)),
-        F.col("doc"),
-    ).withColumn("simhash", sim_col).drop(text_col).cache()
-    blocked = d.select(
-        "doc",
-        block_split_expr(block_bits).alias("bb"),
-    ).select("doc", "bb.blk", "bb.val")
-    l, r = blocked.alias("l"), blocked.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.doc") < F.col("r.doc")),
+        raise ValueError(f"unknown prefilter {prefilter!r}")
+    # spread BEFORE the signature kernel: single-row-group files otherwise
+    # run it single-task
+    keyed = (
+        spread_small_input(
+            docs.select(F.col(id_col).alias("doc"), text), F.col("doc")
         )
-        .select(F.col("l.doc").alias("doc1"), F.col("r.doc").alias("doc2"))
+        .select("doc", sig.alias("sig"))
+        .select("doc", keys.alias("k"))
+        .select("doc", "k.*")
+    )
+    return (
+        bucket_pairs(keyed, keyed.columns[1:])
         .dropDuplicates(["doc1", "doc2"])
     )
 
@@ -762,15 +705,8 @@ def lsh_verified_jaccard_pairs(
     oracle-exact, but a far tighter prefilter). Recall belongs to banding,
     precision to the exact verify.
     """
-    if prefilter == "minhash":
-        cand = _minhash_band_candidates(
-            docs, id_col, text_col, num_hashes, bands, shingle_k, items
-        )
-    elif prefilter == "simhash":
-        cand = _simhash_block_candidates(docs, id_col, text_col, block_bits,
-                                         shingle_k, items)
-    else:
-        raise ValueError(f"unknown prefilter {prefilter!r}")
+    cand = _lsh_candidates(docs, id_col, text_col, prefilter, num_hashes,
+                           bands, shingle_k, block_bits, items)
 
     cols = [F.col(id_col).alias("doc"),
             F.array_distinct(F.split(F.col(text_col), " ")).alias("words")]

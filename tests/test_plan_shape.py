@@ -176,3 +176,45 @@ def test_per_row_unit_join_stays_jvm_only(spark, sf_dir):
     for python_node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert python_node not in p, f"python on the hot path: {python_node}"
     assert "ACOS" in p.upper()
+
+
+def test_near_dup_surfaces_sign_once_without_cache(spark, sf_dir, tmp_path):
+    """Every near-dup surface pairs rows through text.bucket_pairs: the
+    signed rows have one consumer, so the plan holds no cached relation
+    (InMemoryTableScan) and exactly one signature Python node."""
+    from geoengine.fixtures import near_dup_images_table
+    from geoengine.images import phash_near_dup_pairs
+    from geoengine.similarity import (
+        cosine_near_dup_exact,
+        cosine_near_dup_pairs,
+        hashed_tf_vectors,
+    )
+    from geoengine.text import (
+        lsh_verified_jaccard_pairs,
+        minhash_near_dup_pairs,
+        simhash_near_dup_pairs,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    vecs = hashed_tf_vectors(docs)
+    # stored table: the fixture is itself a mapInPandas
+    near_dup_images_table(spark, 20, partitions=2).write.parquet(
+        str(tmp_path / "images"))
+    imgs = spark.read.parquet(str(tmp_path / "images"))
+    surfaces = [
+        (lsh_verified_jaccard_pairs(docs, threshold=0.8, prefilter="minhash"),
+         "ArrowEvalPython", 1),
+        (lsh_verified_jaccard_pairs(docs, threshold=0.8, prefilter="simhash"),
+         "ArrowEvalPython", 1),
+        (minhash_near_dup_pairs(docs), "ArrowEvalPython", 1),
+        (simhash_near_dup_pairs(docs), "ArrowEvalPython", 1),
+        (cosine_near_dup_pairs(vecs, 0.95, id_col="doc", probe_bits=2),
+         "ArrowEvalPython", 1),
+        (cosine_near_dup_exact(vecs, 0.95, id_col="doc"), "ArrowEvalPython", 0),
+        (phash_near_dup_pairs(imgs), "MapInPandas", 1),
+    ]
+    for pairs, sig_node, n in surfaces:
+        p = _plan(spark, pairs, "simple")
+        assert "InMemoryTableScan" not in p, p
+        assert p.count(sig_node) == n, p
+        assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p

@@ -350,17 +350,84 @@ def test_ngram_jaccard_max_group_rows_guard(spark):
     assert ngram_jaccard_pairs(docs).count() > 0
 
 
-def test_hash_near_dup_cache_registry(spark):
-    from geoengine.text import hash_near_dup_pairs
+def test_near_dup_paths_leave_no_cached_blocks(spark, tmp_path):
+    """Every near-dup surface pairs through bucket_pairs with no .cache():
+    forcing one leaves no persisted RDD behind in the session."""
+    from geoengine.clusters import _persistent_rdd_ids
+    from geoengine.fixtures import near_dup_images_table
+    from geoengine.images import phash_near_dup_pairs
+    from geoengine.similarity import (cosine_near_dup_exact,
+                                      cosine_near_dup_pairs, hashed_tf_vectors)
 
-    df = spark.createDataFrame(
+    docs = _docs_with_dups(spark)
+    vecs = hashed_tf_vectors(docs)
+    imgs = near_dup_images_table(spark, 40, partitions=2)
+    hashes = spark.createDataFrame(
         [(1, 7), (2, 7), (3, 255 << 40)], "doc_id long, h long"
     )
-    reg = []
-    out = hash_near_dup_pairs(df, "h", cache_registry=reg)
+    surfaces = {
+        "lsh_minhash": lambda: text.lsh_verified_jaccard_pairs(
+            docs, threshold=0.5, prefilter="minhash"),
+        "lsh_simhash": lambda: text.lsh_verified_jaccard_pairs(
+            docs, threshold=0.5, prefilter="simhash"),
+        "minhash": lambda: text.minhash_near_dup_pairs(docs),
+        "simhash": lambda: text.simhash_near_dup_pairs(docs),
+        "hash": lambda: text.hash_near_dup_pairs(hashes, "h"),
+        "cosine_exact": lambda: cosine_near_dup_exact(vecs, 0.95, id_col="doc"),
+        "cosine_lsh": lambda: cosine_near_dup_pairs(vecs, 0.95, id_col="doc"),
+        "phash": lambda: phash_near_dup_pairs(imgs),
+    }
+    results = {}
+    for name, build in surfaces.items():
+        before = _persistent_rdd_ids(spark)
+        results[name] = build().collect()
+        assert _persistent_rdd_ids(spark) - before == set(), name
+        assert results[name], name
     # (1,2) hamming 0 kept; doc 3 is a block-collision candidate (shared
     # zero blocks) but at hamming 11 it is filtered
-    assert out.count() == 1
-    assert len(reg) == 1
-    for d in reg:
-        d.unpersist()
+    assert [(r.doc1, r.doc2, r.hamming) for r in results["hash"]] == [(1, 2, 0)]
+
+
+def _brute_bucket_pairs(rows, keys, carry):
+    out = []
+    for a in rows:
+        for b in rows:
+            if (all(a[k] is not None and a[k] == b[k] for k in keys)
+                    and a["doc"] < b["doc"]):
+                out.append((a["doc"], b["doc"],
+                            *[v for c in carry for v in (a[c], b[c])]))
+    return sorted(out)
+
+
+def test_bucket_pairs_matches_brute_force(spark):
+    """bucket_pairs == the all-row-pairs reference: one row per pair per
+    shared bucket, multi-column keys, carried columns aligned, duplicate
+    ids never self-pair, singleton and null-key buckets emit nothing."""
+    rng = np.random.default_rng(5)
+    keyed = [
+        # (1, 2) share 3 buckets: (0, 0), (0, 1), (5, 5)
+        *[(d, k1, k2) for d in (1, 2) for k1, k2 in ((0, 0), (0, 1), (5, 5))],
+        (1, 1, 0), (2, 0, 2),  # same k1 or same k2 alone is not a bucket
+        (3, 7, 7), (3, 7, 7), (4, 7, 7),  # duplicate id 3 in one bucket
+        (5, 9, 9),  # singleton bucket
+        (6, None, 4), (8, None, 4),  # null key never pairs
+        *zip(rng.integers(10, 40, 60).tolist(), rng.integers(0, 3, 60).tolist(),
+             rng.integers(0, 2, 60).tolist()),
+    ]
+    rows = [{"doc": d, "k1": k1, "k2": k2, "c": f"c{d}", "x": 1000 * d + i}
+            for i, (d, k1, k2) in enumerate(keyed)]
+    df = spark.createDataFrame(
+        [tuple(r.values()) for r in rows],
+        "doc long, k1 long, k2 long, c string, x long",
+    )
+    out = text.bucket_pairs(df, ["k1", "k2"], carry=["c", "x"])
+    assert out.columns == ["doc1", "doc2", "c1", "c2", "x1", "x2"]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == _brute_bucket_pairs(rows, ["k1", "k2"], ["c", "x"])
+    assert all(d1 < d2 and c1 == f"c{d1}" and c2 == f"c{d2}"
+               and x1 // 1000 == d1 and x2 // 1000 == d2
+               for d1, d2, c1, c2, x1, x2 in got)
+    assert sum((d1, d2) == (1, 2) for d1, d2, *_ in got) == 3
+    assert sum((d1, d2) == (3, 4) for d1, d2, *_ in got) == 2
+    assert not any(5 in (d1, d2) or (d1, d2) == (6, 8) for d1, d2, *_ in got)
+    assert text.bucket_pairs(df, ["k1", "k2"]).columns == ["doc1", "doc2"]

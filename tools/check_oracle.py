@@ -12,12 +12,18 @@ invocations).
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the Python workers import the engine too, whatever the cwd
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents "
