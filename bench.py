@@ -1,7 +1,8 @@
 """Headline benchmark — run:  python bench.py
 
 Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on) and
+prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "rows": {...}, "rows_per_sec": {...}}
 
@@ -98,7 +99,8 @@ def wait_for_idle() -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     idle_gate = wait_for_idle()  # before the JVM starts inflating loadavg
     spark = get_spark("geoengine-bench", cores=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -30,7 +30,8 @@ def force(df) -> None:
 def main() -> None:
     only = set(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     spark = get_spark("geoengine-bench-extra", cores=cpus,
                       shuffle_partitions=cpus)

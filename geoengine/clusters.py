@@ -48,17 +48,20 @@ from pyspark.sql import functions as F
 # broadcast hard cap, and numpy converges in O(m log^2 n) vector ops
 # (~100 ms at the cap). At 100 TB the threshold simply never fires for
 # corpus-scale graphs and the certified distributed loop runs unchanged.
-CC_LOCAL_EDGES = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "4000000"))
+# Overridable through SPARK_GRAFT_CC_LOCAL_EDGES, read at call time.
+def _cc_local_edges() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", 4_000_000))
+
 
 # spatial_dbscan core-set broadcast gate: the auto-contraction probe
 # already counts core points in its (free) aggregate; at or below this
 # many cores the core-id set (and the equally-sized label frame) is
 # broadcast so the semi/anti/border joins stop re-shuffling the full
 # eps-pair set. 2M int64 ids ~ 80 MB as a broadcast hashed relation —
-# the same order as the engine's other broadcast caps. Env-overridable.
-_CORE_BROADCAST_ROWS = int(
-    os.environ.get("SPARK_GRAFT_DBSCAN_CORE_BCAST_ROWS", "2000000")
-)
+# the same order as the engine's other broadcast caps. Overridable
+# through SPARK_GRAFT_DBSCAN_CORE_BCAST_ROWS, read at call time.
+def _core_broadcast_rows() -> int:
+    return int(os.environ.get("SPARK_GRAFT_DBSCAN_CORE_BCAST_ROWS", 2_000_000))
 
 
 def _local_cc_labels(u: "np.ndarray", v: "np.ndarray"):  # noqa: F821
@@ -91,7 +94,7 @@ def _local_cc_labels(u: "np.ndarray", v: "np.ndarray"):  # noqa: F821
             label = nl
         if np.array_equal(label, before):
             return ids, label
-    return None, None  # pathological; caller falls back to the star loop
+    return None, None  # pathological: the caller raises (no fallback)
 
 
 def _cc_single_task(edges: DataFrame) -> DataFrame:
@@ -99,7 +102,10 @@ def _cc_single_task(edges: DataFrame) -> DataFrame:
     (bounded) edge set — numerically exact, same labels as the star loop
     (cluster_id = component MIN node id). The mapInPandas runs on
     ``coalesce(1)`` so the edge blocks stream into one executor task (no
-    driver collect). Falls back by raising if the vector loop failed."""
+    driver collect). Non-convergence of the vector loop is a hard error:
+    the task raises and the job fails; there is no star-loop fallback.
+    Ids come back as the edges' own integer type, so this path and the
+    star loop return the same schema."""
     import pandas as pd
 
     def gen(batches):
@@ -116,7 +122,10 @@ def _cc_single_task(edges: DataFrame) -> DataFrame:
             raise RuntimeError("local CC did not converge")  # pragma: no cover
         yield pd.DataFrame({"node": ids, "cluster_id": ids[label]})
 
-    return edges.coalesce(1).mapInPandas(gen, schema="node long, cluster_id long")
+    t = edges.schema["u"].dataType
+    return edges.coalesce(1).mapInPandas(
+        gen, schema="node long, cluster_id long"
+    ).select(F.col("node").cast(t), F.col("cluster_id").cast(t))
 
 
 def _persistent_rdd_ids(spark) -> set:
@@ -269,11 +278,11 @@ def connected_components(
         ).schema
         handle.unpersist()
         return spark.createDataFrame([], schema)
-    if sig[0] <= CC_LOCAL_EDGES and all(
+    if sig[0] <= _cc_local_edges() and all(
         f.dataType.typeName() in ("long", "integer", "short", "byte")
         for f in edges.schema.fields
     ):
-        # bounded fast path (see CC_LOCAL_EDGES): identical labels, one
+        # bounded fast path (see _cc_local_edges): identical labels, one
         # job instead of ~(2 shuffles + 2 actions) x rounds. The label
         # frame is eagerly checkpointed so both downstream consumers read
         # blocks instead of re-running the union-find.
@@ -579,8 +588,14 @@ def spatial_dbscan(
     # broadcast replaces a shuffle of the large side). Hint-only: results
     # identical; with no probe (contract=False/None grid) or a large core
     # set the shuffle plan is unchanged — at 100 TB the gate never fires.
+    # A session that disabled broadcasts (autoBroadcastJoinThreshold -1/0)
+    # never gets the hint, like the knn gates.
+    from .knn import _session_broadcast_bytes
+
     bcast_core = (
-        core_count is not None and core_count <= _CORE_BROADCAST_ROWS
+        core_count is not None
+        and core_count <= _core_broadcast_rows()
+        and _session_broadcast_bytes(pairs) > 0
     )
     core_b = F.broadcast(core) if bcast_core else core
 

@@ -144,6 +144,18 @@ def knn_join_rings(
         to broadcast, so stragglers must not force one (AQE still picks a
         broadcast at runtime if the side turns out small).
 
+    Fallback gate: the neighbor and origin frames are counted exactly up
+    front (each count fills a cache round 1 reads anyway, except for a
+    stat-less neighbor source, counted once before its cache to also size
+    ``half_bits``). Before EVERY round — round 1 included — a straggler
+    set with pending x neighbors <= the pairs budget (4M pairs per core,
+    measured; see ``_FALLBACK_PAIRS_PER_CORE``) goes straight to the exact
+    fallback instead of the ring loop. A small problem therefore caches
+    only those two frames and runs no ring round at all; a large neighbor
+    table alone exceeds the budget, so the scale path is unchanged.
+    ``neighbor_count`` (caller-supplied or a plan-stats estimate) only
+    sizes ``half_bits``; the gate multiplies exact counts.
+
     Cache lifetime: the per-round nb/pending/ranked/done caches feed the
     RETURNED lazy plan (the union only materializes when the caller acts),
     so they cannot be unpersisted here without forcing eager per-round
@@ -179,11 +191,12 @@ def knn_join_rings(
     o_all = spread_small_input(o_all, F.col("origin_id"))
     nb = _prefixed(validate_points(neighbors), "neighbor_")
 
-    if neighbor_count is None:
-        neighbor_count = estimated_rows(nb)
-        if neighbor_count is None:
-            neighbor_count = nb.count()
+    nb_n = None  # exact neighbor count, for the fallback gate
     if half_bits is None:
+        if neighbor_count is None:
+            neighbor_count = estimated_rows(nb)
+            if neighbor_count is None:
+                neighbor_count = nb_n = nb.count()
         # aim for ~4k neighbors expected inside ring 1 (9 cells)
         density_target = max(k * 4, 16)
         cells_needed = max(neighbor_count * 9 // density_target, 1)
@@ -199,32 +212,25 @@ def knn_join_rings(
         "_oix", exprs.grid_ix(F.col("origin_longitude"), hb)
     ).withColumn("_oiy", exprs.grid_iy(F.col("origin_latitude"), hb)))
 
+    # exact sizes for the fallback gate; each count materializes a cache
+    # that round 1 (or the fallback) reads anyway
+    if nb_n is None:
+        nb_n = nb.count()
+    pending_n = pending.count()
+    budget = _fallback_pairs_budget(nb.sparkSession)
+
     results = []
     acc: DataFrame | None = None  # pending origins' top-k-so-far candidates
     r, prev_r = 1, -1
-    pending_n: int | None = None  # known exactly from round 2 on
     for _ in range(max_rounds):
         if 2 * r + 1 > n:
             break  # shell would wrap the globe: no disjointness, fall back
-        if pending_n is None:
-            # round 1: cheap non-emptiness probe only (a count here would
-            # full-scan the origin table at scale)
-            if not pending.take(1):
-                break
-        else:
-            if pending_n == 0:
-                break
-            if pending_n * neighbor_count <= _FALLBACK_PAIRS_BUDGET:
-                # straggler set is small enough that the EXACT fallback
-                # cross join is a bounded, one-stage job: running it now
-                # is identical in results to more ring rounds (both are
-                # exact) but skips each remaining round's probe-join/
-                # window/anti-join chain (~0.5-1 s of sequential jobs per
-                # round; measured 2.3 s -> 1.3 s on the bench's 15k x 1k
-                # kNN). At scale neighbor_count alone exceeds the budget,
-                # so the ring loop runs in full — this only short-
-                # circuits the tail.
-                break
+        if pending_n == 0 or pending_n * nb_n <= budget:
+            # the EXACT fallback cross join is then a bounded one-stage
+            # job, identical in results to (more) ring rounds but without
+            # their probe-join/window/anti-join job chains (a 1,500 x 100
+            # kNN: 15 -> 9 Spark jobs per call)
+            break
         dx = F.explode(F.sequence(F.lit(-r), F.lit(r)))
         dy = F.explode(F.sequence(F.lit(-r), F.lit(r)))
         probe = (
@@ -309,10 +315,17 @@ def knn_join_rings(
     # exact fallback for origins no round could certify — NO broadcast hint:
     # the neighbor side may exceed broadcast capacity (that's why rings was
     # selected); AQE may still pick a broadcast when it turns out small.
-    if pending_n if pending_n is not None else pending.take(1):
+    # With no origins at all it still runs, as the empty result's schema.
+    if pending_n or not results:
+        nb_side = nb.drop("n_gkey")
+        if pending_n < nb_n:
+            # the cross join broadcasts the smaller side and streams the
+            # other: a narrow neighbor scan would stream every pair through
+            # one task (4.2k x 15k origins x neighbors: > 13 min, vs 66 s
+            # spread over 4 cores)
+            nb_side = spread_small_input(nb_side, F.col("neighbor_id"))
         rest = _ranked(
-            _pairs_dist(pending.drop("_oix", "_oiy"), nb.drop("n_gkey"), "cross"),
-            k,
+            _pairs_dist(pending.drop("_oix", "_oiy"), nb_side, "cross"), k
         )
         results.append(rest)
 
@@ -346,15 +359,30 @@ def knn_join_rings_scoped(
 # default) — any "size" past this is a placeholder, not a measurement
 _STATS_UNKNOWN_BYTES = 1 << 48
 
-# rings early-fallback budget: once |pending| * |neighbors| fits this many
-# candidate pairs, the EXACT cross-join fallback finishes the stragglers in
-# one bounded stage instead of paying further ring rounds' sequential-job
-# chains. 64M pairs ~ 2M trig evals/core on a 32-way stage — well under a
-# second; a large neighbor table alone exceeds it, so the scale path is
-# unaffected. Env-overridable for clusters with different core budgets.
-_FALLBACK_PAIRS_BUDGET = int(
-    os.environ.get("SPARK_GRAFT_KNN_FALLBACK_PAIRS", str(64 << 20))
-)
+
+# candidate pairs per core below which the exact cross join beats the ring
+# loop. Measured at 4 cores on sf0.1 (orders x 15k customers, k=5, warm,
+# min of 2): the ring loop costs a near-fixed ~24-29 s wall / 45-61 CPU s
+# from 1.6M to 63M pairs, while the cross join grows with the pairs —
+# 15.6M: 9.6 s / 35 CPU s, 31M: 27.5 s / 92 CPU s, 63M: 66 s. The crossover
+# is ~22M pairs in CPU and ~31M in wall time, so 4M pairs per core (16M at
+# 4 cores) keeps a margin on both.
+_FALLBACK_PAIRS_PER_CORE = 4 << 20
+
+
+def _fallback_pairs_budget(spark) -> int:
+    """Rings early-fallback budget: once |pending| * |neighbors| fits this
+    many candidate pairs, the EXACT cross-join fallback finishes the
+    origins in one stage instead of paying (further) ring rounds'
+    sequential-job chains. The ring loop's cost is mostly per-job latency
+    while the cross join's is pairs spread over the cores, so the budget
+    scales with the session's default parallelism. Overridable through
+    SPARK_GRAFT_KNN_FALLBACK_PAIRS, read at call time."""
+    env = os.environ.get("SPARK_GRAFT_KNN_FALLBACK_PAIRS")
+    if env is not None:
+        return int(env)
+    return _FALLBACK_PAIRS_PER_CORE * spark.sparkContext.defaultParallelism
+
 
 _BROADCAST_HARD_CAP = 64 << 20
 
@@ -487,9 +515,8 @@ def knn_join(
     if fits is None:
         # stat-less source (JDBC/RDD-backed leaf): no eager count HERE —
         # route conservatively to rings (broadcasting an unknown-size side
-        # is the unsafe direction). Rings pays one count() of the neighbor
-        # side to size half_bits — genuinely required; pass half_bits +
-        # neighbor_count to make the whole path job-free at plan time.
+        # is the unsafe direction). Rings counts the neighbor side once
+        # (sizing half_bits and its fallback gate) and its origin frame.
         return knn_join_rings(origins, neighbors, k, **kw)
     if fits:
         return knn_join_brute(origins, neighbors, k)

@@ -82,20 +82,36 @@ def test_empty_pairs(spark):
 @pytest.mark.parametrize("seed", [11, 41])
 def test_local_fast_path_equals_star_loop(spark, seed, monkeypatch):
     """Round-6 optimization guard: the bounded single-task min-label fast
-    path (CC_LOCAL_EDGES) and the distributed star loop must produce
-    IDENTICAL (node, cluster_id) sets on the same graph — chain + blobs +
-    random noise edges cover deep, wide and disconnected components."""
-    import geoengine.clusters as C
-
+    path (SPARK_GRAFT_CC_LOCAL_EDGES) and the distributed star loop must
+    produce IDENTICAL (node, cluster_id) sets on the same graph — chain +
+    blobs + random noise edges cover deep, wide and disconnected
+    components."""
     rng = random.Random(seed)
     edges = [(i, i + 1) for i in range(40)]  # deep chain
     edges += [(100, 100 + j) for j in range(1, 20)]  # star hub
     edges += [(rng.randrange(300), rng.randrange(300)) for _ in range(120)]
     edges = [(a, b) for a, b in edges if a != b]
     fast = _cc_spark(spark, edges)  # default threshold: fast path fires
-    monkeypatch.setattr(C, "CC_LOCAL_EDGES", 0)  # force the star loop
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_EDGES", "0")  # star loop
     slow = _cc_spark(spark, edges)
     assert fast == slow
+
+
+@pytest.mark.parametrize("id_type", ["long", "int", "short"])
+def test_cc_branches_return_same_schema(spark, id_type, monkeypatch):
+    """The single-task fast path and the star loop return the same
+    (node, cluster_id) schema — the input ids' own type — and the same
+    rows, so a caller cannot tell which side of the edge-count gate a
+    graph landed on."""
+    edges = [(i, i + 1) for i in range(30)] + [(50, 60), (60, 70)]
+    pairs = spark.createDataFrame(edges, f"doc1 {id_type}, doc2 {id_type}")
+    fast = connected_components(pairs)
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_EDGES", "0")
+    slow = connected_components(pairs)
+    assert fast.dtypes == slow.dtypes == [
+        ("node", pairs.dtypes[0][1]), ("cluster_id", pairs.dtypes[0][1])
+    ]
+    assert sorted(fast.collect()) == sorted(slow.collect())
 
 
 def test_local_cc_labels_kernel():
@@ -361,6 +377,36 @@ def test_dbscan_plan_no_cartesian_and_cache_released(spark):
     for h in reg:
         h.unpersist()
     assert _n_persistent(spark) <= before
+
+
+def test_dbscan_core_broadcast_respects_disabled_broadcasts(spark):
+    """autoBroadcastJoinThreshold=-1 forbids broadcasts: the core-set
+    broadcast gate must not force one (no broadcast anywhere in the
+    plan), and the labels stay exact."""
+    rng = random.Random(5)
+    pts = [(i, 10.0 + rng.uniform(-0.5, 0.5), 10.0 + rng.uniform(-0.5, 0.5))
+           for i in range(40)]
+    pts += [(40 + i, rng.uniform(-80, 80), rng.uniform(-170, 170))
+            for i in range(10)]
+    from geoengine.clusters import spatial_dbscan
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = spark.createDataFrame(
+            pts, "id long, latitude double, longitude double"
+        )
+        reg = []
+        out = spatial_dbscan(df, 60.0, 5, cache_registry=reg)
+        got = {r["id"]: (r["is_core"], r["cluster_id"])
+               for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        for h in reg:
+            h.unpersist()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "Broadcast" not in plan
+    assert got == _brute_dbscan(pts, 60.0, 5)
 
 
 def test_dbscan_contract_invariance_blobs(spark):

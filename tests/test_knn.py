@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from geoengine.knn import knn_join_brute, knn_join_rings, knn_join_rings_scoped
 
@@ -21,7 +22,14 @@ def _key_set(df):
     return set(zip(df["origin_id"], df["neighbor_id"], df["knn_rank"]))
 
 
-def test_rings_equals_brute(spark):
+def _ring_loop_only(monkeypatch):
+    """Budget 0: the early fallback never fires, so the ring loop (and its
+    pole guard) computes every origin it can certify."""
+    monkeypatch.setenv("SPARK_GRAFT_KNN_FALLBACK_PAIRS", "0")
+
+
+def test_rings_equals_brute(spark, monkeypatch):
+    _ring_loop_only(monkeypatch)
     o = spark.createDataFrame(_points(11, 200))
     nb = spark.createDataFrame(_points(12, 1000))
     k = 5
@@ -37,11 +45,10 @@ def test_rings_equals_brute(spark):
 
 def test_rings_early_fallback_gate_invariance(spark, monkeypatch):
     """Round-6 optimization guard: the straggler budget gate
-    (_FALLBACK_PAIRS_BUDGET) only changes WHICH exact branch computes an
-    origin's top-k — results with the gate forced off (full ring rounds)
-    must equal results with it forced to fire immediately after round 1."""
-    import geoengine.knn as K
-
+    (SPARK_GRAFT_KNN_FALLBACK_PAIRS) only changes WHICH exact branch
+    computes an origin's top-k — results with the gate forced off (full
+    ring rounds) must equal results with it forced to fire before round
+    1."""
     o = spark.createDataFrame(_points(21, 150))
     nb = spark.createDataFrame(_points(22, 800))
     k = 4
@@ -51,12 +58,67 @@ def test_rings_early_fallback_gate_invariance(spark, monkeypatch):
             df.select("origin_id", "neighbor_id", "knn_rank").toPandas()
         )
 
-    monkeypatch.setattr(K, "_FALLBACK_PAIRS_BUDGET", 0)  # never short-circuit
+    monkeypatch.setenv("SPARK_GRAFT_KNN_FALLBACK_PAIRS", "0")  # never fire
     full_rings = keys(knn_join_rings(o, nb, k))
-    monkeypatch.setattr(K, "_FALLBACK_PAIRS_BUDGET", 1 << 60)  # always fire
+    monkeypatch.setenv("SPARK_GRAFT_KNN_FALLBACK_PAIRS", str(1 << 60))
     early = keys(knn_join_rings(o, nb, k))
     assert full_rings == early
     assert full_rings == keys(knn_join_brute(o, nb, k))
+
+
+@pytest.mark.parametrize("stats", ["known", "unknown"])
+def test_rings_small_problem_skips_ring_loop(spark, stats, monkeypatch):
+    """Under the default budget a small problem goes to the exact fallback
+    before round 1: only the neighbor and origin frames are cached (no
+    per-round ranked/done/pending caches) and the result is exact —
+    also when plan statistics are unknown and the neighbor count that
+    sizes half_bits doubles as the gate's exact count."""
+    import geoengine.knn as K
+
+    if stats == "unknown":
+        monkeypatch.setattr(K, "estimated_rows", lambda df: None)
+    o = spark.createDataFrame(_points(23, 150))
+    nb = spark.createDataFrame(_points(24, 100))
+    reg: list = []
+    rings = knn_join_rings(o, nb, 5, cache_registry=reg).select(
+        "origin_id", "neighbor_id", "knn_rank"
+    ).toPandas()
+    assert len(reg) == 2
+    brute = knn_join_brute(o, nb, 5).select(
+        "origin_id", "neighbor_id", "knn_rank"
+    ).toPandas()
+    assert len(rings) == 150 * 5
+    assert _key_set(rings) == _key_set(brute)
+    for df in reg:
+        df.unpersist()
+
+
+def test_rings_fallback_spreads_narrow_neighbor_side(spark):
+    """Fewer origins than neighbors: the fallback cross join broadcasts the
+    origins and streams the neighbors, so a one-partition neighbor source
+    is hash-spread first instead of producing every pair in one task."""
+    o = spark.createDataFrame(_points(27, 20))
+    nb = spark.createDataFrame(_points(28, 600)).coalesce(1)
+    rings = knn_join_rings(o, nb, 3)
+    plan = rings._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(neighbor_id" in plan
+    want = knn_join_brute(o, nb, 3).select(
+        "origin_id", "neighbor_id", "knn_rank").toPandas()
+    got = rings.select("origin_id", "neighbor_id", "knn_rank").toPandas()
+    assert _key_set(got) == _key_set(want)
+
+
+def test_rings_empty_origins(spark, monkeypatch):
+    """No origins: an empty result with the brute surface's columns,
+    whichever side of the fallback gate the call lands on."""
+    o = spark.createDataFrame(_points(25, 10)).limit(0)
+    nb = spark.createDataFrame(_points(26, 50))
+    want = knn_join_brute(o, nb, 3).columns
+    for budget in ("0", str(64 << 20)):
+        monkeypatch.setenv("SPARK_GRAFT_KNN_FALLBACK_PAIRS", budget)
+        out = knn_join_rings(o, nb, 3)
+        assert out.count() == 0
+        assert sorted(out.columns) == sorted(want)
 
 
 def _n_persistent_rdds(spark) -> int:
@@ -81,7 +143,8 @@ def test_rings_scoped_releases_caches(spark):
     assert _n_persistent_rdds(spark) == base  # zero engine-owned blocks left
 
 
-def test_rings_sparse_neighbors_fallback(spark):
+def test_rings_sparse_neighbors_fallback(spark, monkeypatch):
+    _ring_loop_only(monkeypatch)
     # fewer neighbors than k forces the brute fallback path
     o = spark.createDataFrame(_points(13, 50))
     nb = spark.createDataFrame(_points(14, 3))
@@ -89,7 +152,8 @@ def test_rings_sparse_neighbors_fallback(spark):
     assert (out.groupby("origin_id").size() == 3).all()
 
 
-def test_rings_polar_origins_equal_brute(spark):
+def test_rings_polar_origins_equal_brute(spark, monkeypatch):
+    _ring_loop_only(monkeypatch)
     # regression: origins within one cell of the pole must not be certified
     # by the ring bound — an over-the-pole neighbor (large delta-lon) can be
     # closer than the grid-separation guarantee; pole guard routes them to
@@ -123,7 +187,8 @@ def test_rings_polar_origins_equal_brute(spark):
     assert _key_set(rings) == _key_set(brute)
 
 
-def test_rings_clustered_hot_region(spark):
+def test_rings_clustered_hot_region(spark, monkeypatch):
+    _ring_loop_only(monkeypatch)
     # dense cluster (hot cells) + far outliers
     rng = np.random.default_rng(15)
     nb = pd.DataFrame(
@@ -147,7 +212,8 @@ def test_rings_clustered_hot_region(spark):
     assert _key_set(rings) == _key_set(brute)
 
 
-def test_rings_near_pole_band_edge_window(spark):
+def test_rings_near_pole_band_edge_window(spark, monkeypatch):
+    _ring_loop_only(monkeypatch)
     # round-3 review regression: with the old cos clamp at 89.9 deg, an
     # origin whose certification band edge (|lat| + (r+1) cells) lands in
     # (89.9, 90) got an INFLATED lon bound and could be over-certified.

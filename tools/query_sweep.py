@@ -23,7 +23,8 @@ def main() -> None:
     import __spark_entry__ as e
     from geoengine.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     spark = get_spark("query-sweep", cores=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
